@@ -17,9 +17,12 @@ adds the two classic sub-linear strategies for 100 TB corpora:
   a deterministic centroid subset (first C corpus vectors — a real
   deployment would k-means them; determinism is what makes the catalog
   query checkable), invert the corpus by nearest centroid, probe the
-  ``nprobe`` nearest lists. The inverted lists are exactly a
-  hash-partitioned table keyed by centroid id: at cluster scale each
-  probe is a partition-pruned scan.
+  ``nprobe`` nearest lists. Assignment has two forms, picked by the
+  centroid count: a literal argmax projection up to
+  :data:`LITERAL_ASSIGN_MAX` centroids and one mapInArrow numpy pass
+  above it — never a (vector, centroid) pair join. The inverted lists
+  are exactly a hash-partitioned table keyed by centroid id: at
+  cluster scale each probe is a partition-pruned scan.
 
 Both return exact cosine scores within the probed candidate set and keep
 the (similarity DESC, id ASC) tiebreak of the exact path.
@@ -33,7 +36,6 @@ from pyspark.sql import functions as F
 from ..functions.vector import (
     as_double,
     cosine_sim,
-    cosine_sim_prenormed,
     dot,
     lit_double_matrix,
     lit_doubles,
@@ -52,54 +54,32 @@ __all__ = [
     "ivf_recover",
     "ann_ivf_topk",
     "nearest_centroid_ids",
+    "CentroidLimitError",
     "LITERAL_CENTROID_MAX",
 ]
 
-#: Above this many centroids the literal-expression fast path is skipped
-#: (the generated expression would be enormous) and the broadcast
-#: crossJoin + window path takes over.
+#: Above this many centroids :func:`ann_ivf_topk`'s query probes (and the
+#: PQ probes) stop embedding the centroid matrix as a literal argmax and
+#: take the broadcast crossJoin + per-query window instead.
 LITERAL_CENTROID_MAX = 256
-#: Above this many centroids the literal argmax expression (k*dim
-#: nodes) exceeds whole-stage codegen's method-size budget and falls
+#: Above this many centroids corpus assignment leaves the literal argmax
+#: (k*dim nodes exceed whole-stage codegen's method-size budget and fall
 #: back to interpreted eval — measured ~100 s for 200k x 64d rows at
-#: k=195 vs seconds via the broadcast-join + max_by aggregate path.
+#: k=195) for the :func:`_assign_arrow` mapInArrow kernel.
 LITERAL_ASSIGN_MAX = 64
-#: Centroid-count ceiling for the mapInArrow blocked assignment (r13):
-#: the centroid matrix is collected to the driver and shipped in the
-#: task closure, so bound it the same way as the literal boundary —
-#: 4096 x dim doubles is ~2 MB at dim 64, FAISS-coarse-quantizer
-#: territory. Beyond it the broadcast-join + max_by path remains.
+#: Centroid-count ceiling for the mapInArrow assignment: the centroid
+#: matrix is collected to the driver and shipped in the task closure
+#: (4096 x dim doubles is ~2 MB at dim 64, FAISS-coarse-quantizer
+#: territory). Beyond it corpus assignment refuses with
+#: :class:`CentroidLimitError`.
 ARROW_ASSIGN_MAX = 4096
 
 
-def _centroids_as_literals(
-    centroids: DataFrame | list[tuple[int, list[float]]],
-    centroid_id: str = "centroid_id",
-    centroid_vec: str = "cvec",
-) -> list[tuple[int, list[float]]] | None:
-    """Collect a (small) centroid table to the driver as
-    ``[(id, [components])]``, or None if it exceeds
-    :data:`LITERAL_CENTROID_MAX`.
+class CentroidLimitError(ValueError):
+    """More centroids than an assignment or probe form supports."""
 
-    A coarse quantizer is tiny by definition (k×dim doubles), so
-    embedding it as literal expressions turns nearest-centroid
-    assignment into a pure per-row projection — no crossJoin, no
-    per-vector window shuffle, nothing besides the corpus scan. The
-    collect moves ≤ 256×dim doubles, the same sanctioned driver
-    boundary as ``ask()``'s k rows.
-
-    Callers that already hold the trained centroids as driver values
-    (every catalog query — training memoizes k×dim doubles) pass the
-    ``[(id, vec)]`` list directly: wrapping values in a DataFrame only
-    to re-collect them here costs a ~1 s execution round-trip per call
-    on the serving path.
-    """
-    if isinstance(centroids, list):
-        return sorted((int(c), [float(x) for x in v]) for c, v in centroids)
-    rows = centroids.limit(LITERAL_CENTROID_MAX + 1).collect()
-    if len(rows) > LITERAL_CENTROID_MAX:
-        return None
-    return sorted((int(r[centroid_id]), [float(x) for x in r[centroid_vec]]) for r in rows)
+    def __init__(self, op: str, limit: int):
+        super().__init__(f"{op}: more than {limit} centroids is not supported")
 
 
 def _collect_centroids(
@@ -108,13 +88,20 @@ def _collect_centroids(
     centroid_vec: str,
     limit: int,
 ) -> list[tuple[int, list[float]]] | None:
-    """Centroids as driver values up to ``limit`` rows, else None.
+    """Centroids as driver values ``[(id, [components])]`` sorted by id,
+    or None if there are more than ``limit``.
 
-    Same sanctioned driver boundary as :func:`_centroids_as_literals`
-    (a coarse quantizer is k×dim doubles by definition); the separate
-    helper exists because the mapInArrow path tolerates a much larger k
-    than the literal-expression path (matrix bytes in a task closure vs
-    k×dim AST nodes re-analyzed per action)."""
+    A coarse quantizer is tiny by definition (k×dim doubles), so the
+    collect is the same sanctioned driver boundary as ``ask()``'s k
+    rows; it turns nearest-centroid assignment into a per-row projection
+    or one map-only Arrow pass — no (vector, centroid) pair relation.
+
+    Callers that already hold the trained centroids as driver values
+    (every catalog query — training memoizes k×dim doubles) pass the
+    ``[(id, vec)]`` list directly: wrapping values in a DataFrame only
+    to re-collect them here costs a ~1 s execution round-trip per call
+    on the serving path.
+    """
     if isinstance(centroids, list):
         cents = sorted((int(c), [float(x) for x in v]) for c, v in centroids)
         return cents if len(cents) <= limit else None
@@ -166,19 +153,20 @@ def _assign_arrow(
     corpus_id: str,
     corpus_vec: str,
     centroid_id: str,
-    cid_type,
 ) -> DataFrame:
     """Nearest-centroid assignment as ONE mapInArrow pass (r13, guide
-    §4.2): no (vector, centroid) pair relation is ever materialized —
-    the broadcast-join + max_by form emitted |corpus|·k rows through a
-    BroadcastNestedLoopJoin volcano iterator (9e7 rows for the sf10
-    graph build, ~40-90 s per assignment) just to fold them straight
-    back down to |corpus| rows.
+    §4.2), the form for more than :data:`LITERAL_ASSIGN_MAX` centroids
+    in both :func:`ivf_assign` and k-means: no (vector, centroid) pair
+    relation is ever materialized — the broadcast-join + max_by form it
+    replaced emitted |corpus|·k rows through a BroadcastNestedLoopJoin
+    volcano iterator (9e7 rows for the sf10 graph build, ~40-90 s per
+    assignment) just to fold them straight back down to |corpus| rows.
+    ``centroid_id`` comes out as bigint, like the literal path's.
 
     Bit-exactness contract (pinned by
     ``test_ivf_assign_arrow_matches_join_path``): per (vector, centroid)
-    the cosine is the same IEEE chain as the join path's
-    ``dot/(nv*cn)`` —
+    the cosine is the same IEEE chain as the broadcast-join reference's
+    ``dot/(nv*cn)`` (kept in the tests) —
     - dots/norms are SEQUENTIAL per-dimension folds starting at 0.0
       (``acc += v[:,j]*c[:,j]`` loops j in order: each scalar
       accumulator sees the identical add sequence as the unrolled
@@ -197,15 +185,14 @@ def _assign_arrow(
     (the HOF join path yielded NULL similarities for ragged rows — a
     state no catalog corpus can reach; VERDICT r12 item 5 asks for the
     loud contract over silent divergence)."""
-    from pyspark.sql.types import StructField, StructType
+    from pyspark.sql.types import LongType, StructField, StructType
 
     mat = [v for _, v in cents]
     ids = [c for c, _ in cents]
     in_schema = corpus.select(corpus_id, corpus_vec).schema
     out_schema = StructType(
-        [in_schema[0], in_schema[1], StructField(centroid_id, cid_type, True)]
+        [in_schema[0], in_schema[1], StructField(centroid_id, LongType(), True)]
     )
-    cid_np = "int32" if cid_type.typeName() == "integer" else "int64"
 
     def assign_batches(batches):
         import numpy as np
@@ -249,7 +236,7 @@ def _assign_arrow(
                 zs = np.flatnonzero(row == 0.0)
                 pos = zs[~np.signbit(row[zs])]
                 best[i] = pos[0] if pos.size else zs[0]
-            out = pa.array(cid_arr[best].astype(cid_np))
+            out = pa.array(cid_arr[best])
             yield pa.record_batch(
                 [batch.column(0), batch.column(1), out],
                 names=[corpus_id, corpus_vec, centroid_id],
@@ -511,110 +498,35 @@ def ivf_assign(
     corpus_vec: str = "embedding",
     centroid_id: str = "centroid_id",
     centroid_vec: str = "cvec",
-    dim: int | None = None,
 ) -> DataFrame:
     """Invert the corpus by nearest centroid (max cosine, centroid-id-asc
-    tiebreak). Output adds ``centroid_id`` — write partitioned/bucketed
-    by it to make probes partition-pruned.
+    tiebreak). Output adds a bigint ``centroid_id`` — write
+    partitioned/bucketed by it to make probes partition-pruned.
 
-    When the centroid table is small (≤ :data:`LITERAL_CENTROID_MAX`,
-    the normal case — a coarse quantizer IS small), assignment compiles
-    to a per-row argmax expression over literal centroid arrays: the
-    corpus is scanned once and NEVER shuffled. Larger centroid sets fall
-    back to broadcast crossJoin + per-vector window (which shuffles the
-    corpus by id)."""
-    cents = _centroids_as_literals(centroids, centroid_id, centroid_vec)
-    if cents is not None and len(cents) == 0:
-        # zero centroids (ADVICE r12): every form degenerates to an
-        # empty assignment (the join path crossJoined an empty side);
-        # return it explicitly instead of building a plan that indexes
-        # into an empty centroid matrix.
+    The corpus is scanned once and never shuffled. Up to
+    :data:`LITERAL_ASSIGN_MAX` centroids (the normal case — a coarse
+    quantizer IS small) assignment compiles to a per-row argmax
+    expression over literal centroid arrays; up to
+    :data:`ARROW_ASSIGN_MAX` it is one mapInArrow numpy pass
+    (:func:`_assign_arrow`, bit-identical values). More centroids raise
+    :class:`CentroidLimitError`."""
+    cents = _collect_centroids(centroids, centroid_id, centroid_vec, ARROW_ASSIGN_MAX)
+    if cents is None:
+        raise CentroidLimitError("ivf_assign", ARROW_ASSIGN_MAX)
+    if not cents:
+        # zero centroids (ADVICE r12): an empty assignment, instead of a
+        # plan that indexes into an empty centroid matrix
         return corpus.select(corpus_id, corpus_vec).where(F.lit(False)).withColumn(
             centroid_id, F.lit(None).cast("bigint")
         )
-    if cents is not None and len(cents) <= LITERAL_ASSIGN_MAX:
-        pre = corpus.select(
-            corpus_id, corpus_vec, as_double(F.col(corpus_vec)).alias("__vd")
-        ).withColumn("__nv", F.sqrt(dot(F.col("__vd"), F.col("__vd"))))
-        nearest = nearest_centroid_ids(F.col("__vd"), F.col("__nv"), cents, nprobe=1)
-        return pre.select(
-            corpus_id, corpus_vec, F.element_at(nearest, 1).alias(centroid_id)
-        )
-    # r13 (guide §4.2, VERDICT r12 item 1): above the literal bound,
-    # assignment is a mapInArrow + numpy blocked pass — ONE map-only
-    # scan, no |corpus|·k pair relation, no shuffle (the previous
-    # broadcast-join + max_by form pushed 9e7 BroadcastNestedLoopJoin
-    # rows per sf10 graph-build assignment). Values bit-identical to
-    # both join paths (same IEEE fold order — see _assign_arrow).
-    # centroid_id dtype follows the centroids relation, as the join
-    # path's max_by did.
-    from pyspark.sql.types import LongType
-
-    if isinstance(centroids, DataFrame):
-        cid_type = centroids.schema[centroid_id].dataType
-    else:
-        cid_type = LongType()  # the rebuilt-DataFrame path used bigint
-    acents = (
-        cents
-        if cents is not None
-        else _collect_centroids(centroids, centroid_id, centroid_vec, ARROW_ASSIGN_MAX)
-    )
-    if acents is not None:
-        return _assign_arrow(
-            corpus, acents, corpus_id, corpus_vec, centroid_id, cid_type
-        )
-    # >ARROW_ASSIGN_MAX centroids only (no catalog path reaches here).
-    # Broadcast-join + max_by aggregate: the argmax runs as a partial
-    # (map-side) aggregate right on top of the broadcast join, so the
-    # only shuffle carries one slim row per corpus vector — never the
-    # k-fanned score relation, and never a per-vector sort window.
-    # Both norms are materialized ONCE per side before the join (one
-    # fold per pair instead of three — same values, the literal path's
-    # exact arithmetic). Tie order matches the window form and the
-    # oracle: csim DESC, centroid_id ASC == max over
-    # struct(csim, -centroid_id).
-    if dim is not None:
-        # r12 optimization (guide §4.1): the per-(vector, centroid) HOF
-        # cosine paid ~250 interpreted lambda evals per pair — at sf10
-        # the 200k×447 graph-build assignment alone was ~250 s. The
-        # unrolled sequential fold has the identical IEEE op order
-        # (inputs are already array<double>, so the as_double pass was
-        # a value no-op); whole-stage codegen is scope-disabled (the
-        # wide fold exceeds the huge-method JIT limit when fused).
-        from ..functions.vector import dot_fold_sql
-        from ..session import scoped_no_wholestage_codegen
-
-        scoped_no_wholestage_codegen(corpus.sparkSession)
-        nv = F.expr(f"SQRT({dot_fold_sql('__vd', '__vd', dim)})")
-        cn = F.expr(f"SQRT({dot_fold_sql('__cd', '__cd', dim)})")
-        csim = F.expr(
-            f"CASE WHEN __nv = 0.0D OR __cn = 0.0D THEN 0.0D"
-            f" ELSE {dot_fold_sql('__vd', '__cd', dim)} / (__nv * __cn) END"
-        )
-    else:
-        nv = F.sqrt(dot(F.col("__vd"), F.col("__vd")))
-        cn = F.sqrt(dot(F.col("__cd"), F.col("__cd")))
-        csim = cosine_sim_prenormed(
-            F.col("__vd"), F.col("__nv"), F.col("__cd"), F.col("__cn")
-        )
+    if len(cents) > LITERAL_ASSIGN_MAX:
+        return _assign_arrow(corpus, cents, corpus_id, corpus_vec, centroid_id)
     pre = corpus.select(
         corpus_id, corpus_vec, as_double(F.col(corpus_vec)).alias("__vd")
-    ).withColumn("__nv", nv)
-    cpre = centroids.select(
-        F.col(centroid_id).alias("__cid"),
-        as_double(F.col(centroid_vec)).alias("__cd"),
-    ).withColumn("__cn", cn)
-    scored = pre.crossJoin(F.broadcast(cpre)).select(
-        corpus_id,
-        corpus_vec,
-        "__cid",
-        csim.alias("__csim"),
-    )
-    return scored.groupBy(corpus_id).agg(
-        F.first(corpus_vec).alias(corpus_vec),  # constant within the group
-        F.max_by(
-            F.col("__cid"), F.struct(F.col("__csim"), (-F.col("__cid")).alias("__nc"))
-        ).alias(centroid_id),
+    ).withColumn("__nv", F.sqrt(dot(F.col("__vd"), F.col("__vd"))))
+    nearest = nearest_centroid_ids(F.col("__vd"), F.col("__nv"), cents, nprobe=1)
+    return pre.select(
+        corpus_id, corpus_vec, F.element_at(nearest, 1).alias(centroid_id)
     )
 
 
@@ -740,38 +652,31 @@ def ann_ivf_topk(
     """IVF probe: per query, search the ``nprobe`` nearest inverted lists.
 
     Join order at scale: (query × centroid) is tiny and broadcast; the
-    corpus side is touched only on the probed centroid ids. Small
-    centroid tables (the normal case) take the literal-expression path
-    for both the corpus inversion and the query probes — see
-    :func:`ivf_assign`.
+    corpus side is touched only on the probed centroid ids. Query probes
+    use the literal argmax up to :data:`LITERAL_CENTROID_MAX` centroids
+    and a broadcast crossJoin + per-query window above it.
 
     ``inverted``: a prebuilt ``(corpus_id, corpus_vec, centroid_id)``
     inverted table (from :func:`ivf_assign`, typically persisted or
     written partitioned by centroid id). Corpus inversion is index
     BUILD, not query work — serving systems assign each vector to its
     list once at ingest; pass it here so per-query cost is only the
-    probed lists."""
-    cents = _centroids_as_literals(centroids, centroid_id, centroid_vec)
+    probed lists. Without it the corpus is inverted by
+    :func:`ivf_assign`."""
+    # the probes need at most LITERAL_CENTROID_MAX as values; inverting
+    # the corpus here needs up to ARROW_ASSIGN_MAX
+    limit = LITERAL_CENTROID_MAX if inverted is not None else ARROW_ASSIGN_MAX
+    cents = _collect_centroids(centroids, centroid_id, centroid_vec, limit)
     if inverted is None:
-        if cents is not None:
-            cpre = corpus.select(
-                corpus_id, corpus_vec, as_double(F.col(corpus_vec)).alias("__vd")
-            ).withColumn("__nv", F.sqrt(dot(F.col("__vd"), F.col("__vd"))))
-            inverted = cpre.select(
-                corpus_id,
-                corpus_vec,
-                F.element_at(
-                    nearest_centroid_ids(
-                        F.col("__vd"), F.col("__nv"), cents, nprobe=1
-                    ),
-                    1,
-                ).alias(centroid_id),
-            )
-        else:
-            inverted = ivf_assign(
-                corpus, centroids, corpus_id, corpus_vec, centroid_id, centroid_vec
-            )
-    if cents is not None:
+        inverted = ivf_assign(
+            corpus,
+            centroids if cents is None else cents,
+            corpus_id,
+            corpus_vec,
+            centroid_id,
+            centroid_vec,
+        )
+    if cents is not None and len(cents) <= LITERAL_CENTROID_MAX:
         # two selects: a Generate (explode) in the same projection as the
         # struct-array ranking strips the struct field names
         qpre = queries.select(
@@ -785,6 +690,10 @@ def ann_ivf_topk(
             ).alias("__probes"),
         ).select(query_id, query_vec, F.explode("__probes").alias(centroid_id))
     else:
+        if isinstance(centroids, list):
+            centroids = queries.sparkSession.createDataFrame(
+                centroids, f"{centroid_id} bigint, {centroid_vec} array<double>"
+            )
         q_scored = queries.crossJoin(F.broadcast(centroids)).withColumn(
             "__qsim", cosine_sim(F.col(query_vec), F.col(centroid_vec))
         )

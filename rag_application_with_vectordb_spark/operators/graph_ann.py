@@ -74,7 +74,7 @@ def knn_graph_edges(
     IEEE stable argsort equals the window's Double.compare order;
     ties break by ascending id via the stable sort over id-sorted rows.
     """
-    assigned = ivf_assign(corpus, centroids, corpus_id, corpus_vec, dim=dim)
+    assigned = ivf_assign(corpus, centroids, corpus_id, corpus_vec)
     from pyspark.sql.types import StructField, StructType
 
     from .ann import _arrow_f64_matrix
@@ -156,7 +156,7 @@ def cell_medoids(
     cell. Output ``(centroid_id, vec_id)``. ``dim`` engages the
     unrolled fixed-dim cosine (r12, value-identical — see
     functions.vector.cosine_sim_sql)."""
-    assigned = ivf_assign(corpus, centroids, corpus_id, corpus_vec, dim=dim)
+    assigned = ivf_assign(corpus, centroids, corpus_id, corpus_vec)
     if dim is not None:
         from ..functions.vector import cosine_sim_sql
 

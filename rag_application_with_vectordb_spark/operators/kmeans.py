@@ -164,13 +164,6 @@ def kmeans_fit_spherical_fp(
     ``DataFrame.sample``) keeps the subsample engine-reproducible, so the
     trained centroids remain bit-identical in the DuckDB oracle.
     """
-    from ..operators.ann import LITERAL_CENTROID_MAX
-
-    if int(k) > LITERAL_CENTROID_MAX:  # pragma: no cover - catalog uses small k
-        s = int(scale)
-        if sample_mod is not None and int(sample_mod) > 1:
-            points = points.filter(F.col(id_col) % int(sample_mod) == 0)
-        return _kmeans_fp_joined(points, int(k), int(iterations), id_col, vec_col, s)
     cents = kmeans_fit_spherical_fp_values(
         points, k, iterations, id_col, vec_col, scale, sample_mod
     )
@@ -195,18 +188,19 @@ def kmeans_fit_spherical_fp_values(
     only loads it), so callers that issue many queries against one
     corpus should train once via this function and reuse the values —
     training is deterministic, making the reuse result-invisible."""
-    from ..operators.ann import LITERAL_ASSIGN_MAX, nearest_centroid_ids
+    from ..operators.ann import LITERAL_ASSIGN_MAX, _assign_arrow, nearest_centroid_ids
 
     s = int(scale)
     if sample_mod is not None and int(sample_mod) > 1:
         points = points.filter(F.col(id_col) % int(sample_mod) == 0)
 
-    # Literal-centroid path: centroids live on the driver between
-    # iterations (k×dim doubles — the same sanctioned boundary as ask()'s
-    # k rows). Assignment is a per-row argmax expression, so each
-    # iteration costs ONE corpus scan + one 512-key aggregation — the
-    # corpus is never shuffled and the lazy plan never re-derives earlier
-    # iterations (the joined fallback's plan doubles per iteration).
+    # Centroids live on the driver between iterations (k×dim doubles —
+    # the same sanctioned boundary as ask()'s k rows). Assignment is
+    # ivf_assign's two forms — a per-row literal argmax up to
+    # LITERAL_ASSIGN_MAX centroids, the mapInArrow kernel above — so each
+    # iteration costs ONE corpus scan + one (centroid, dim) aggregation:
+    # the corpus is never shuffled and the lazy plan never re-derives
+    # earlier iterations.
     init = points.orderBy(F.asc(id_col)).limit(int(k)).select(id_col, vec_col).collect()
     init.sort(key=lambda r: r[id_col])
     cents: list[tuple[int, list[float]]] = [
@@ -231,39 +225,9 @@ def kmeans_fit_spherical_fp_values(
     try:
         for _ in range(int(iterations)):
             if len(cents) > LITERAL_ASSIGN_MAX:
-                # large k: the literal argmax expression (k*dim nodes)
-                # drops out of codegen and evaluates interpreted — use
-                # the broadcast-join + max_by aggregate instead (the
-                # ivf_assign join path; identical fold arithmetic and
-                # sim DESC / centroid-id ASC tie order, so the trained
-                # centroids are bit-identical to the literal path's)
-                from ..functions.vector import cosine_sim_prenormed
-
-                spark = points.sparkSession
-                cdf = spark.createDataFrame(
-                    [(int(c), [float(x) for x in v]) for c, v in cents],
-                    "centroid_id bigint, cvec array<double>",
-                )
-                cpre = cdf.select(
-                    "centroid_id", as_double(F.col("cvec")).alias("__cd")
-                ).withColumn("__cn", F.sqrt(dot(F.col("__cd"), F.col("__cd"))))
-                scored = pre.crossJoin(F.broadcast(cpre)).select(
-                    "__id",
-                    "__vd",
-                    "centroid_id",
-                    cosine_sim_prenormed(
-                        F.col("__vd"), F.col("__nv"), F.col("__cd"), F.col("__cn")
-                    ).alias("__csim"),
-                )
-                assigned = scored.groupBy("__id").agg(
-                    F.first("__vd").alias("__vd"),
-                    F.max_by(
-                        F.col("centroid_id"),
-                        F.struct(
-                            F.col("__csim"), (-F.col("centroid_id")).alias("__nc")
-                        ),
-                    ).alias("centroid_id"),
-                )
+                # large k: the literal argmax (k*dim nodes) drops out of
+                # codegen — use the bit-identical Arrow kernel instead
+                assigned = _assign_arrow(pre, cents, "__id", "__vd", "centroid_id")
             else:
                 nearest = nearest_centroid_ids(
                     F.col("__vd"), F.col("__nv"), cents, nprobe=1
@@ -293,60 +257,6 @@ def kmeans_fit_spherical_fp_values(
     finally:
         pre.unpersist()
     return cents
-
-
-def _kmeans_fp_joined(
-    points: DataFrame, k: int, iterations: int, id_col: str, vec_col: str, s: int
-) -> DataFrame:
-    """DataFrame-only fallback for centroid counts too large to embed as
-    literal expressions: broadcast crossJoin + per-vector window for
-    assignment, join-carried centroids between iterations. Same math,
-    same results — just more exchanges."""
-    from ..functions.vector import cosine_sim
-
-    centroids = (
-        points.orderBy(F.asc(id_col))
-        .limit(int(k))
-        .select(
-            F.row_number().over(Window.orderBy(F.asc(id_col))).alias("centroid_id"),
-            as_double(F.col(vec_col)).alias("cvec"),
-        )
-        .withColumn("centroid_id", F.col("centroid_id") - 1)
-    )
-    for _ in range(int(iterations)):
-        scored = points.crossJoin(F.broadcast(centroids)).withColumn(
-            "__sim", cosine_sim(as_double(F.col(vec_col)), F.col("cvec"))
-        )
-        w = Window.partitionBy(id_col).orderBy(F.desc("__sim"), F.asc("centroid_id"))
-        assigned = (
-            scored.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select(id_col, vec_col, "centroid_id")
-        )
-        comps = assigned.select(
-            "centroid_id", F.posexplode(as_double(F.col(vec_col))).alias("dim", "val")
-        )
-        sums = comps.groupBy("centroid_id", "dim").agg(
-            F.sum(F.floor(F.col("val") * F.lit(float(s))).cast("long")).alias("fp_sum"),
-            F.count("*").alias("n"),
-        )
-        means = (
-            sums.withColumn(
-                "m",
-                F.col("fp_sum").cast("double") / (F.col("n") * F.lit(s)).cast("double"),
-            )
-            .groupBy("centroid_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("dim", "m"))),
-                    lambda st: st.getField("m"),
-                ).alias("cvec_new")
-            )
-        )
-        centroids = centroids.join(means, "centroid_id", "left").select(
-            "centroid_id", F.coalesce(F.col("cvec_new"), F.col("cvec")).alias("cvec")
-        )
-    return centroids
 
 
 def inertia(points: DataFrame, centroids: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding") -> float:

@@ -47,7 +47,6 @@ def knn(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     keep_cols: Iterable[str] = (),
-    dim: int | None = None,
 ) -> DataFrame:
     """Top-k rows of ``corpus`` by cosine similarity to one query vector.
 
@@ -55,24 +54,9 @@ def knn(
     (``vectorDb.ts:11-24``); k defaults to the reference call-site value 5
     (``App.tsx:191``). Empty corpus → empty result (``vectorDb.ts:12-14``
     falls out naturally).
-
-    ``dim`` (r12 optimization round, guide §4.1): when the caller knows
-    the corpus dimensionality, scoring uses the unrolled fixed-dim
-    cosine (functions.vector.cosine_sim_sql) — value-identical for
-    every input incl. the -1.0/0.0 edges (rows whose arrays are not
-    ``dim`` long take the original HOF branch per row), but
-    codegen-able instead of interpreted. The caller's plan should
-    scope-disable whole-stage codegen at dim ≳ 32
-    (session.scoped_no_wholestage_codegen).
     """
-    if dim is not None and not isinstance(query_vec, Column):
-        from ..functions.vector import _dlit, cosine_sim_sql
-
-        q_sql = "array(" + ",".join(_dlit(float(v)) for v in query_vec) + ")"
-        sim = F.expr(cosine_sim_sql(vec_col, q_sql, dim))
-    else:
-        q = query_vec if isinstance(query_vec, Column) else vec_lit(query_vec)
-        sim = cosine_sim(F.col(vec_col), q)
+    q = query_vec if isinstance(query_vec, Column) else vec_lit(query_vec)
+    sim = cosine_sim(F.col(vec_col), q)
     cols = [F.col(id_col), *[F.col(c) for c in keep_cols]]
     scored = corpus.select(*cols, sim.alias("similarity"))
     # Catalyst → TakeOrderedAndProject (verified via explain): per-partition
@@ -117,8 +101,9 @@ def knn_join(
             n_parts = corpus.sparkSession.sparkContext.defaultParallelism
         two_stage = n_parts > TWO_STAGE_MIN_PARTITIONS
     if dim is not None:
-        # r12: unrolled fixed-dim cosine (see knn() docstring); both
-        # sides are plain column names here, so the SQL form applies.
+        # r12: unrolled fixed-dim cosine (functions.vector.cosine_sim_sql,
+        # value-identical to the HOF form but codegen-able); both sides
+        # are plain column names here, so the SQL form applies.
         from ..functions.vector import cosine_sim_sql
 
         sim = F.expr(cosine_sim_sql(corpus_vec, query_vec, dim))

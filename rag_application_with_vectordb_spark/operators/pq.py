@@ -304,10 +304,12 @@ def ann_ivfpq_adc_topk(
     the candidate top-k. The exact re-rank of the shortlist (two-phase,
     as in ``operators/quant.py``) composes on top when recall needs it.
     """
-    from .ann import _centroids_as_literals, nearest_centroid_ids
+    from .ann import LITERAL_CENTROID_MAX, CentroidLimitError, _collect_centroids, nearest_centroid_ids
     from pyspark.sql import Window
 
-    cents = _centroids_as_literals(centroids, centroid_id, centroid_vec)
+    cents = _collect_centroids(centroids, centroid_id, centroid_vec, LITERAL_CENTROID_MAX)
+    if cents is None:
+        raise CentroidLimitError("ann_ivfpq_adc_topk", LITERAL_CENTROID_MAX)
     qv = as_double(F.col(query_vec))
     qpre = queries.select(query_id, query_vec, qv.alias("__vd")).withColumn(
         "__nv", F.sqrt(dot(F.col("__vd"), F.col("__vd")))
@@ -387,10 +389,12 @@ def ann_ivfadc_topk(
     ``residual_codes``: ``(id_col, centroid_id, codes)`` from
     ``pq_encode`` over ``pq_residuals`` (index build, persistable).
     """
-    from .ann import _centroids_as_literals, nearest_centroid_ids
+    from .ann import LITERAL_CENTROID_MAX, CentroidLimitError, _collect_centroids, nearest_centroid_ids
     from pyspark.sql import Window
 
-    cents = _centroids_as_literals(centroids, centroid_id, centroid_vec)
+    cents = _collect_centroids(centroids, centroid_id, centroid_vec, LITERAL_CENTROID_MAX)
+    if cents is None:
+        raise CentroidLimitError("ann_ivfadc_topk", LITERAL_CENTROID_MAX)
     ids = [cid for cid, _ in cents]
     if ids != list(range(len(cents))):
         # element_at(cents_lit, centroid_id + 1) below positions by id; a

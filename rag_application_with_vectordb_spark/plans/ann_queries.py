@@ -379,7 +379,7 @@ def _trained_quantizer_vals(spark: SparkSession, sf_dir: str) -> list[tuple[int,
     over :func:`_trained_quantizer` anywhere the centroids are only
     turned into literals: the DataFrame wrapper costs a ~1 s
     collect round-trip per call (measured; see
-    ``operators.ann._centroids_as_literals``)."""
+    ``operators.ann._collect_centroids``)."""
     key = _ivf_key(sf_dir)
     if key not in _QUANTIZER_CACHE:
         _trained_quantizer(spark, sf_dir)

@@ -483,8 +483,9 @@ def test_ivf_assign_arrow_matches_join_path(spark, emb):
     ref = {r["vec_id"]: r["centroid_id"] for r in _join_path_assignment(emb, centroids).collect()}
     rows = got.collect()
     assert {r["vec_id"]: r["centroid_id"] for r in rows} == ref
-    # dtype follows the centroid relation (int here), embedding passes through
-    assert dict(got.dtypes)["centroid_id"] == "int"
+    # centroid_id is bigint on every path (int centroid ids here), embedding
+    # passes through
+    assert dict(got.dtypes)["centroid_id"] == "bigint"
     orig = {r["vec_id"]: r["embedding"] for r in emb.collect()}
     assert all(r["embedding"] == orig[r["vec_id"]] for r in rows)
 
@@ -525,3 +526,112 @@ def test_ivf_assign_arrow_contract_violations_raise(spark):
 
 def test_ivf_assign_empty_centroids_is_empty(spark, emb):
     assert ivf_assign(emb, []).count() == 0
+
+
+@pytest.mark.parametrize("id_type", ["int", "bigint"])
+@pytest.mark.parametrize("k", [0, 4, 70])
+def test_ivf_assign_centroid_id_is_bigint(emb, k, id_type):
+    """Empty, literal (k <= LITERAL_ASSIGN_MAX) and Arrow assignment all
+    emit a bigint centroid_id, whatever the centroid relation's id type."""
+    centroids = emb.filter(F.col("vec_id") < k).select(
+        F.col("vec_id").cast(id_type).alias("centroid_id"),
+        F.col("embedding").alias("cvec"),
+    )
+    assert dict(ivf_assign(emb, centroids).dtypes)["centroid_id"] == "bigint"
+
+
+def test_ivf_assign_refuses_over_arrow_limit(spark):
+    from rag_application_with_vectordb_spark.operators.ann import (
+        ARROW_ASSIGN_MAX,
+        CentroidLimitError,
+    )
+
+    corpus = spark.createDataFrame([(0, [1.0])], "vec_id bigint, embedding array<double>")
+    cents = [(i, [1.0]) for i in range(ARROW_ASSIGN_MAX + 1)]
+    with pytest.raises(CentroidLimitError, match=f"more than {ARROW_ASSIGN_MAX}"):
+        ivf_assign(corpus, cents)
+
+
+@pytest.mark.parametrize("op", ["ann_ivfpq_adc_topk", "ann_ivfadc_topk"])
+def test_pq_probes_refuse_over_limit_centroids(spark, op):
+    """More centroids than the literal probe supports raise the named
+    limit error, not a TypeError from iterating None."""
+    from rag_application_with_vectordb_spark.operators import pq
+    from rag_application_with_vectordb_spark.operators.ann import (
+        LITERAL_CENTROID_MAX,
+        CentroidLimitError,
+    )
+
+    n = LITERAL_CENTROID_MAX + 44
+    cents = spark.createDataFrame(
+        [(i, [1.0, float(i)]) for i in range(n)], "centroid_id int, cvec array<double>"
+    )
+    rel = spark.createDataFrame([], "vec_id bigint")
+    args = dict(centroids=cents, queries=rel, codebook=[[[0.0]]])
+    if op == "ann_ivfpq_adc_topk":
+        args.update(inverted=rel, codes=rel)
+    else:
+        args.update(residual_codes=rel)
+    with pytest.raises(CentroidLimitError, match=f"{op}: more than {LITERAL_CENTROID_MAX}"):
+        getattr(pq, op)(**args)
+
+
+def test_kmeans_large_k_matches_join_path_fit(spark, emb):
+    """k > LITERAL_ASSIGN_MAX: k-means assigns through the Arrow kernel.
+    Pin its trained centroids bitwise against a test-side fit that
+    assigns with the broadcast-join + max_by reference and does the
+    fixed-point mean update in Python integers."""
+    import math
+
+    from rag_application_with_vectordb_spark.operators.ann import LITERAL_ASSIGN_MAX
+    from rag_application_with_vectordb_spark.operators.kmeans import (
+        FP_SCALE,
+        kmeans_fit_spherical_fp_values,
+    )
+
+    k = 70
+    assert k > LITERAL_ASSIGN_MAX
+    got = kmeans_fit_spherical_fp_values(emb, k=k, iterations=2)
+    vecs = {r["vec_id"]: [float(x) for x in r["embedding"]] for r in emb.collect()}
+    cents = [(i, vecs[v]) for i, v in enumerate(sorted(vecs)[:k])]
+    for _ in range(2):
+        cdf = spark.createDataFrame(cents, "centroid_id bigint, cvec array<double>")
+        members: dict[int, list[int]] = {}
+        for r in _join_path_assignment(emb, cdf).collect():
+            members.setdefault(r["centroid_id"], []).append(r["vec_id"])
+        new = []
+        for cid, cvec in cents:
+            ids = members.get(cid)
+            if not ids:
+                new.append((cid, cvec))
+                continue
+            sums = [
+                sum(math.floor(vecs[i][j] * FP_SCALE) for i in ids) for j in range(len(cvec))
+            ]
+            new.append((cid, [t / (len(ids) * FP_SCALE) for t in sums]))
+        cents = new
+    assert got == cents
+
+
+def test_ann_ivf_topk_inverts_large_centroid_sets_through_arrow(emb, queries):
+    """Without a prebuilt index, 65-256 DataFrame centroids invert the
+    corpus through ivf_assign's Arrow kernel, not a per-row literal
+    argmax over the corpus."""
+    centroids = emb.filter(F.col("vec_id") < 100).select(
+        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cvec")
+    )
+    got = ann_ivf_topk(emb, centroids, queries, k=5, nprobe=2)
+    assert "MapInArrow" in got._jdf.queryExecution().executedPlan().toString()
+    assert got.count() == 15
+
+
+def test_ann_ivf_topk_centroid_list_over_literal_limit(emb, queries):
+    """A centroid list above LITERAL_CENTROID_MAX probes through the
+    window path; probing every list still equals the exact scan."""
+    rows = emb.filter(F.col("vec_id") < 300).collect()
+    cents = [(r["vec_id"], [float(x) for x in r["embedding"]]) for r in rows]
+    approx = ann_ivf_topk(emb, cents, queries, k=5, nprobe=len(cents))
+    exact = knn_join(emb, queries, k=5)
+    a = {(r["query_id"], r["vec_id"], round(r["similarity"], 12)) for r in approx.collect()}
+    e = {(r["query_id"], r["vec_id"], round(r["similarity"], 12)) for r in exact.collect()}
+    assert len(a) == 15 and a == e

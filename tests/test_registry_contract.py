@@ -56,6 +56,30 @@ def test_every_query_calls_tune():
     )
 
 
+def test_only_pq_flips_codegen_among_operators():
+    """``scoped_no_wholestage_codegen`` is a session-wide conf flip, not
+    a per-operator optimization (ROADMAP aim 2). ``operators/pq.py`` is
+    the one operator that still uses it (until its numpy port); no
+    other operator may start again. Static AST check: any import,
+    name or attribute reference counts as a call site."""
+    import ast
+    import pathlib
+
+    import rag_application_with_vectordb_spark.operators as ops
+
+    name = "scoped_no_wholestage_codegen"
+    users = set()
+    for path in pathlib.Path(ops.__file__).parent.glob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                (isinstance(node, ast.alias) and node.name == name)
+                or (isinstance(node, ast.Name) and node.id == name)
+                or (isinstance(node, ast.Attribute) and node.attr == name)
+            ):
+                users.add(path.name)
+    assert users == {"pq.py"}, f"operators referencing {name}: {sorted(users)}"
+
+
 def test_no_oracle_outputs_pandas_lossy_types():
     # HUGEINT/UHUGEINT/DECIMAL outputs become float64 through the
     # driver's pandas comparator while Spark emits exact types — any
