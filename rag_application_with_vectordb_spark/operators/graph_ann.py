@@ -1,18 +1,16 @@
 """Graph-based ANN (HNSW-lite): a deterministic kNN neighbor graph +
-fixed-depth beam search, composed entirely from DataFrame operators.
+fixed-depth beam search.
 
 This fills the one mainstream ANN family the engine lacked (NEXT.md /
 VERDICT r6 gap #3): IVF/PQ/LSH/sign-bit partition or quantize the
 space; graph methods instead walk a neighbor graph from an entry point
 toward the query. Full HNSW's search loop is data-dependent ("expand
-until no closer node"), which is driver-side control flow; the
-established distributed re-expression — and what keeps this DETERMINISTIC
-and oracle-checkable — is a FIXED-DEPTH beam search: ``hops`` rounds of
-(frontier ⋈ edges → score → keep best ``beam`` new nodes per query).
-Fixed depth makes the whole search ONE declarative plan (the unrolled-
-iteration pattern proven by ``graph_pagerank``), at the cost of HNSW's
-adaptive termination — recall is then governed by (beam, hops), which
-the clustered-recall monitor measures.
+until no closer node"); what keeps this DETERMINISTIC and
+oracle-checkable is a FIXED-DEPTH beam search: ``hops`` rounds of
+(frontier's out-edges → score → keep best ``beam`` new nodes per
+query), at the cost of HNSW's adaptive termination — recall is then
+governed by (beam, hops), which the clustered-recall monitor measures.
+The oracle twin writes the same rounds as an unrolled SQL plan.
 
 Scale design (100 TB posture):
 - Graph BUILD is cluster-bounded, never all-pairs: candidate pairs
@@ -21,22 +19,22 @@ Scale design (100 TB posture):
   independently in parallel. The build is index-construction work: at
   scale it writes a persisted edge table once (like ``ivf_assign``),
   and every search reads it.
-- SEARCH per hop is: frontier (queries × ≤beam nodes — tiny) ⋈ edges
-  (shuffle-free if edges are bucketed by src) → score only the
-  frontier's neighbors. Per-query work is O(hops · beam · M · d),
-  INDEPENDENT of corpus size — the property that makes graph ANN
-  attractive — vs IVF's O(cell size · d).
-- Everything is exact fp64 HOF cosine with total-order tie-breaks
-  (similarity DESC, vec_id ASC), so results bit-match the DuckDB
-  oracle (``plans.ann_queries.ann_graph_topk``).
+- SEARCH state is queries × ≤beam nodes per hop — kilobytes — so it
+  lives on the driver; each hop is two filtered scans, the frontier's
+  out-edges and the new candidates' vectors. Per-query work is
+  O(hops · beam · M · d), INDEPENDENT of corpus size — the property
+  that makes graph ANN attractive — vs IVF's O(cell size · d).
+- Everything is exact fp64 cosine (sequential per-dimension folds) with
+  total-order tie-breaks (similarity DESC, vec_id ASC), so results
+  bit-match the DuckDB oracle (``plans.ann_queries.ann_graph_topk``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vector import as_double, cosine_sim, cosine_sim_prenormed, l2_norm
+from ..functions.vector import cosine_sim
 from .ann import ivf_assign
 
 __all__ = ["knn_graph_edges", "cell_medoids", "graph_entry_points", "graph_beam_topk"]
@@ -52,7 +50,9 @@ def knn_graph_edges(
 ) -> DataFrame:
     """Symmetrized cluster-bounded exact kNN graph: per node, its ``m``
     nearest same-cell neighbors (cosine DESC, id ASC), then both edge
-    directions, deduped. Output ``(src, dst)``.
+    directions, deduped inside the kernel — the plan has one
+    ``FlatMapGroupsInArrow`` and no union or distinct. Output
+    ``(src, dst)``.
 
     r13 (guide §4.2, VERDICT r12 item 1): the per-cell top-``m`` is ONE
     ``applyInArrow`` pass — each cell's members arrive as one Arrow
@@ -128,18 +128,21 @@ def knn_graph_edges(
             sims[np.arange(s, e) - s, np.arange(s, e)] = -np.inf  # self
             top = np.argsort(-sims, axis=1, kind="stable")[:, :keep]
             dsts[s * keep : e * keep] = ids[top].ravel()
-        return pa.table({"src": pa.array(srcs), "dst": pa.array(dsts)}).cast(
+        # both directions, deduped here: every edge's endpoints share
+        # this cell, so the per-cell dedupe is the global one
+        both = np.unique(
+            np.stack([np.concatenate([srcs, dsts]), np.concatenate([dsts, srcs])], 1),
+            axis=0,
+        )
+        return pa.table({"src": pa.array(both[:, 0]), "dst": pa.array(both[:, 1])}).cast(
             pa.schema([("src", id_t), ("dst", id_t)])
         )
 
-    top = (
+    return (
         assigned.select(corpus_id, corpus_vec, "centroid_id")
         .groupBy("centroid_id")
         .applyInArrow(cell_topm, schema=out_schema)
     )
-    return top.union(
-        top.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
 
 
 def cell_medoids(
@@ -201,6 +204,31 @@ def graph_entry_points(
     )
 
 
+def _id_in(col: str, ids) -> Column:
+    """``col IN (ids)`` as ONE py4j call (see ``functions.vector.lit_doubles``)."""
+    return F.expr(f"`{col}` IN ({','.join(str(int(i)) for i in ids)})")
+
+
+def _beam_vectors(vec, d: int | None, what: str):
+    """Decode a vector column for :func:`graph_beam_topk` and fold its
+    norms: ``(matrix, norms, d)``. Contract violations raise a
+    ``ValueError`` naming the operator."""
+    import numpy as np
+
+    from .ann import _arrow_f64_matrix
+
+    try:
+        V, d = _arrow_f64_matrix(vec, d)
+    except ValueError as e:
+        raise ValueError(f"graph_beam_topk: {what}: {e}") from None
+    if not np.isfinite(V).all():
+        raise ValueError(f"graph_beam_topk: {what}: NaN or infinite components")
+    nrm = np.zeros(len(V))
+    for j in range(d):  # sequential per-dim fold, as in _assign_arrow
+        nrm += V[:, j] * V[:, j]
+    return V, np.sqrt(nrm), d
+
+
 def graph_beam_topk(
     corpus: DataFrame,
     edges: DataFrame,
@@ -213,62 +241,142 @@ def graph_beam_topk(
     corpus_vec: str = "embedding",
     query_id: str = "query_id",
     query_vec: str = "qvec",
-    persist_levels: bool = True,
 ) -> DataFrame:
     """Fixed-depth beam search: ``hops`` rounds of expand-score-prune,
     then exact top-``k`` over every node visited. Candidate budget per
-    query is ≤ ``1 + beam·hops`` scored nodes — compare IVF nprobe=1's
-    whole-cell budget. Output ``(query_id, vec_id, similarity)``.
+    query is ≤ ``entries + beam·hops`` scored nodes — compare IVF
+    nprobe=1's whole-cell budget. Output ``(query_id, vec_id,
+    similarity)``, a local relation: collecting it starts no job.
 
-    ``persist_levels``: each level's visited set (≤ queries × beam rows
-    — tiny) is cached; without it, level ``h``'s anti-join re-derives
-    every earlier level's subtree and the plan re-evaluates the edge
-    relation O(2^hops) times (measured 31 s → 2 s at sf0.1). Caches are
-    bounded and per-plan; pass False for a purely declarative tree."""
-    c = corpus.select(
-        F.col(corpus_id).alias("vec_id"), as_double(F.col(corpus_vec)).alias("__cv")
-    ).withColumn("__cn", l2_norm(F.col("__cv")))
-    q = queries.select(
-        F.col(query_id).alias("query_id"), as_double(F.col(query_vec)).alias("__qv")
-    ).withColumn("__qn", l2_norm(F.col("__qv")))
+    The call is EAGER. The search state — per query, the frontier and
+    the visited (node, similarity) pairs, ≤ entries + beam·hops of
+    them — lives on the driver, and the Spark work runs before the call
+    returns: one collect each of ``queries`` and ``entries``, then two
+    filtered scans per hop — the frontier's out-edges (``src IN …``)
+    and the new candidates' vectors (``vec_id IN …``; the entries'
+    vectors ride along in the first hop's). A scan with nothing to
+    fetch is skipped. Nothing is persisted, so the call leaves no cache
+    behind.
 
-    def score(nodes: DataFrame) -> DataFrame:
-        return (
-            nodes.join(c, "vec_id")
-            .join(F.broadcast(q), "query_id")
-            .select(
+    Driver memory: a hop fetches at most queries × max(entries, beam) ×
+    out-degree candidate vectors of ``dim`` doubles (plus the edge rows
+    that name them); fetched vectors are kept until the call returns,
+    so the total is bounded by ``hops`` times that.
+
+    Scoring is the ``_assign_arrow`` / ``cell_topm`` contract: cast to
+    float64, dots and norms are sequential per-dimension folds from
+    0.0, either norm exactly 0.0 → similarity 0.0. Each hop keeps, per
+    query, the best ``beam`` unvisited out-neighbours of its frontier
+    by (similarity DESC, vec_id ASC), the DuckDB oracle's order; the
+    fold cannot produce -0.0, so the order is total. Corpus ids are
+    unique; an entry or neighbour absent from the corpus is skipped. A
+    NULL, NaN/infinite or wrong-length vector among the queries or the
+    scored candidates raises ``ValueError``."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    spark = corpus.sparkSession
+    out_schema = StructType(
+        [
+            StructField(
                 "query_id",
-                "vec_id",
-                cosine_sim_prenormed(
-                    F.col("__cv"), F.col("__cn"), F.col("__qv"), F.col("__qn")
-                ).alias("similarity"),
-            )
-        )
-
-    visited = score(entries.select("query_id", "vec_id"))
-    if persist_levels:
-        visited = visited.persist()
-    frontier = visited.select("query_id", "vec_id")
-    w = Window.partitionBy("query_id").orderBy(F.desc("similarity"), F.asc("vec_id"))
-    for _ in range(int(hops)):
-        nbrs = (
-            frontier.join(edges, frontier["vec_id"] == edges["src"])
-            .select("query_id", F.col("dst").alias("vec_id"))
-            .distinct()
-            .join(visited.select("query_id", "vec_id"), ["query_id", "vec_id"], "left_anti")
-        )
-        new = (
-            score(nbrs)
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= int(beam))
-            .drop("__rn")
-        )
-        visited = visited.unionByName(new)
-        if persist_levels:
-            visited = visited.persist()
-        frontier = new.select("query_id", "vec_id")
-    return (
-        visited.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= int(k))
-        .drop("__rn")
+                queries.schema[query_id].dataType,
+                queries.schema[query_id].nullable,
+            ),
+            StructField("vec_id", corpus.schema[corpus_id].dataType, True),
+            StructField("similarity", DoubleType(), True),
+        ]
     )
+    qt = queries.select(query_id, query_vec).toArrow()
+    q_ids = qt.column(0).to_pylist()
+    qrow = {q: i for i, q in enumerate(q_ids)}
+    starts: list[set] = [set() for _ in q_ids]
+    if q_ids:
+        Q, qn, d = _beam_vectors(qt.column(1), None, "query vectors")
+        et = entries.select("query_id", "vec_id").toArrow()
+        for q, node in zip(et.column(0).to_pylist(), et.column(1).to_pylist()):
+            if q in qrow:
+                starts[qrow[q]].add(node)
+
+    vecs: dict = {}  # node -> (vector, norm); None if absent from the corpus
+
+    def load(nodes) -> None:
+        want = sorted({n for n in nodes if n not in vecs})
+        if not want:
+            return
+        t = corpus.filter(_id_in(corpus_id, want)).select(corpus_id, corpus_vec).toArrow()
+        V, vn, _ = _beam_vectors(t.column(1), d, "candidate vectors")
+        vecs.update(dict.fromkeys(want))
+        vecs.update(zip(t.column(0).to_pylist(), zip(V, vn)))
+
+    def score(pairs):
+        """[(query row, node)] → [(query row, node, similarity)]."""
+        pairs = [(qi, n) for qi, n in pairs if vecs[n] is not None]
+        if not pairs:
+            return []
+        qi = np.array([p[0] for p in pairs])
+        V = np.array([vecs[n][0] for _, n in pairs])
+        vn = np.array([vecs[n][1] for _, n in pairs])
+        Qp, qnp = Q[qi], qn[qi]
+        acc = np.zeros(len(pairs))
+        for j in range(d):  # sequential per-dim fold
+            acc += V[:, j] * Qp[:, j]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            sims = acc / (vn * qnp)
+        sims[(vn == 0.0) | (qnp == 0.0)] = 0.0
+        return [(q, n, s) for (q, n), s in zip(pairs, sims.tolist())]
+
+    def best(items, limit):  # (similarity DESC, vec_id ASC)
+        return sorted(items, key=lambda t: (-t[1], t[0]))[:limit]
+
+    visited: list[dict] = [{} for _ in q_ids]  # node -> similarity
+    seen = [set(s) for s in starts]  # never a candidate again
+    unscored = [(qi, n) for qi, s in enumerate(starts) for n in sorted(s)]
+    frontier = [sorted(s) for s in starts]
+    for _ in range(int(hops)):
+        src = sorted({n for f in frontier for n in f})
+        if not src:
+            break
+        adj: dict = {}
+        out = edges.filter(_id_in("src", src)).select("src", "dst").toArrow()
+        for a, b in zip(out.column(0).to_pylist(), out.column(1).to_pylist()):
+            adj.setdefault(a, set()).add(b)
+        load([n for _, n in unscored] + [b for bs in adj.values() for b in bs])
+        # an entry absent from the corpus is never visited, so it expands
+        # nothing (every later frontier node was scored)
+        cands = [
+            (qi, n)
+            for qi, f in enumerate(frontier)
+            for n in sorted(
+                {b for a in f if vecs[a] is not None for b in adj.get(a, ())} - seen[qi]
+            )
+        ]
+        for qi, n, s in score(unscored):
+            visited[qi][n] = s
+        unscored = []
+        per_q: list[list] = [[] for _ in q_ids]
+        for qi, n, s in score(cands):
+            per_q[qi].append((n, s))
+        for qi, items in enumerate(per_q):
+            kept = best(items, int(beam))
+            visited[qi].update(kept)
+            seen[qi].update(n for n, _ in kept)
+            frontier[qi] = [n for n, _ in kept]
+    load([n for _, n in unscored])
+    for qi, n, s in score(unscored):
+        visited[qi][n] = s
+
+    rows = [
+        (q, n, s)
+        for qi, q in enumerate(q_ids)
+        for n, s in best(visited[qi].items(), int(k))
+    ]
+    table = pa.table(
+        {
+            "query_id": [r[0] for r in rows],
+            "vec_id": [r[1] for r in rows],
+            "similarity": pa.array([r[2] for r in rows], pa.float64()),
+        }
+    )
+    return spark.createDataFrame(table, out_schema)

@@ -163,12 +163,26 @@ def kmeans_fit_spherical_fp(
     statistically the same quantizer. The modulus filter (not
     ``DataFrame.sample``) keeps the subsample engine-reproducible, so the
     trained centroids remain bit-identical in the DuckDB oracle.
+
+    The result is a local relation built from an Arrow table (k×dim
+    doubles): collecting or broadcasting it starts no job, so the
+    centroid collects of ``ivf_assign`` / ``ann_ivf_topk`` and the
+    broadcasts of ``cell_medoids`` / ``graph_entry_points`` read it for
+    free.
     """
+    import pyarrow as pa
+
     cents = kmeans_fit_spherical_fp_values(
         points, k, iterations, id_col, vec_col, scale, sample_mod
     )
+    table = pa.table(
+        {
+            "centroid_id": pa.array([cid for cid, _ in cents], pa.int32()),
+            "cvec": pa.array([cvec for _, cvec in cents], pa.list_(pa.float64())),
+        }
+    )
     return points.sparkSession.createDataFrame(
-        [(cid, cvec) for cid, cvec in cents], "centroid_id int, cvec array<double>"
+        table, "centroid_id int, cvec array<double>"
     )
 
 

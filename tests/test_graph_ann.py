@@ -1,10 +1,12 @@
 """Graph ANN (HNSW-lite) behavior pins: recall parity at matched
-candidate budget, bounded visited sets, graph well-formedness, and
+candidate budget, bounded visited sets, graph well-formedness,
 determinism under repartitioned input (the properties the bit-exact
-oracle can't express as a single relation)."""
+oracle can't express as a single relation), and bitwise parity of the
+driver-held beam search with the declarative hop plan it replaced."""
 
 from __future__ import annotations
 
+import math
 import statistics
 
 import pytest
@@ -161,3 +163,152 @@ def test_knn_graph_edges_matches_pair_join(spark, n_cells):
     got = {(r["src"], r["dst"]) for r in knn_graph_edges(emb, cents, m=6, dim=64).collect()}
     ref = {(r["src"], r["dst"]) for r in _pair_join_edges(emb, cents, m=6).collect()}
     assert got == ref and len(got) > 0
+
+
+def test_knn_graph_edges_runs_kernel_once(spark, clustered):
+    """Both edge directions come out of the one per-cell kernel: no
+    union re-evaluating it, no distinct over its output."""
+    corpus, cents, *_ = clustered
+    # m=5: the fixture's cached m=6 edges would stand in for this plan
+    plan = knn_graph_edges(corpus, cents, m=5)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FlatMapGroupsInArrow") == 1, plan
+
+
+def _declarative_beam_topk(
+    corpus, edges, entries, queries, k=5, beam=8, hops=3,
+    corpus_id="vec_id", corpus_vec="embedding", query_id="query_id", query_vec="qvec",
+):
+    """The replaced declarative beam search (frontier ⋈ edges → HOF
+    cosine → per-query window, one persisted level per hop) — the
+    bitwise reference for the driver-held ``graph_beam_topk``. Returns
+    ``(schema, rows)`` and unpersists its levels."""
+    from pyspark.sql import Window
+
+    from rag_application_with_vectordb_spark.functions.vector import (
+        as_double,
+        cosine_sim_prenormed,
+        l2_norm,
+    )
+
+    c = corpus.select(
+        F.col(corpus_id).alias("vec_id"), as_double(F.col(corpus_vec)).alias("__cv")
+    ).withColumn("__cn", l2_norm(F.col("__cv")))
+    q = queries.select(
+        F.col(query_id).alias("query_id"), as_double(F.col(query_vec)).alias("__qv")
+    ).withColumn("__qn", l2_norm(F.col("__qv")))
+
+    def score(nodes):
+        return (
+            nodes.join(c, "vec_id")
+            .join(F.broadcast(q), "query_id")
+            .select(
+                "query_id",
+                "vec_id",
+                cosine_sim_prenormed(
+                    F.col("__cv"), F.col("__cn"), F.col("__qv"), F.col("__qn")
+                ).alias("similarity"),
+            )
+        )
+
+    levels = [score(entries.select("query_id", "vec_id")).persist()]
+    visited = levels[0]
+    frontier = visited.select("query_id", "vec_id")
+    w = Window.partitionBy("query_id").orderBy(F.desc("similarity"), F.asc("vec_id"))
+    try:
+        for _ in range(int(hops)):
+            nbrs = (
+                frontier.join(edges, frontier["vec_id"] == edges["src"])
+                .select("query_id", F.col("dst").alias("vec_id"))
+                .distinct()
+                .join(visited.select("query_id", "vec_id"), ["query_id", "vec_id"], "left_anti")
+            )
+            new = (
+                score(nbrs)
+                .withColumn("__rn", F.row_number().over(w))
+                .filter(F.col("__rn") <= int(beam))
+                .drop("__rn")
+            )
+            visited = visited.unionByName(new).persist()
+            levels.append(visited)
+            frontier = new.select("query_id", "vec_id")
+        out = (
+            visited.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") <= int(k))
+            .drop("__rn")
+        )
+        return out.schema, out.collect()
+    finally:
+        for lv in levels:
+            lv.unpersist()
+
+
+def _bits(rows):
+    return sorted((r["query_id"], r["vec_id"], r["similarity"].hex()) for r in rows)
+
+
+@pytest.mark.parametrize("id_type", ["bigint", "int"])
+@pytest.mark.parametrize("layout", ["as_built", "repartitioned"])
+def test_beam_matches_declarative_reference_bitwise(clustered, id_type, layout):
+    """Ids and similarity doubles bit for bit, and the output schema,
+    against the retained declarative plan."""
+    corpus, cents, edges, medoids, queries = clustered
+    corpus = corpus.withColumn("vec_id", F.col("vec_id").cast(id_type))
+    edges = edges.select(F.col("src").cast(id_type), F.col("dst").cast(id_type))
+    queries = queries.withColumn("query_id", F.col("query_id").cast(id_type))
+    if layout == "repartitioned":
+        corpus = corpus.repartition(7)
+        edges = edges.repartition(5)
+    entries = graph_entry_points(queries, cents, medoids, n_entries=2).select(
+        F.col("query_id"), F.col("vec_id").cast(id_type)
+    )
+    args = (corpus, edges, entries, queries)
+    kw = dict(k=10_000, beam=16, hops=4)
+    ref_schema, ref_rows = _declarative_beam_topk(*args, **kw)
+    got = graph_beam_topk(*args, **kw)
+    assert got.schema == ref_schema
+    assert _bits(got.collect()) == _bits(ref_rows)
+    assert len(ref_rows) > 10 * 16
+
+
+def test_beam_leaves_no_cache_and_collects_without_jobs(spark, clustered):
+    corpus, cents, edges, medoids, queries = clustered
+    entries = graph_entry_points(queries, cents, medoids, n_entries=2)
+    sc = spark.sparkContext
+    cm = spark._jsparkSession.sharedState().cacheManager()
+
+    def cached():
+        return cm.numCachedEntries(), sorted(sc._jsc.getPersistentRDDs().keys())
+
+    before = cached()
+    out = graph_beam_topk(corpus, edges, entries, queries, k=5, beam=16, hops=4)
+    assert cached() == before
+    sc.setJobGroup("beam-collect", "collect the beam output")
+    try:
+        rows = out.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("beam-collect")) == []
+    assert len(rows) == 50
+
+
+_BAD_VECTORS = {"nan": [math.nan, 1.0], "null": None, "wrong_length": [1.0, 2.0, 3.0]}
+
+
+@pytest.mark.parametrize("bad", sorted(_BAD_VECTORS))
+@pytest.mark.parametrize("side", ["query", "candidate"])
+def test_beam_contract_violation_is_named(spark, side, bad):
+    """Four 2-d nodes, 0 → 1/2/3; the one query enters at node 0, so
+    node 2 is a scored candidate."""
+    vec = {0: [1.0, 0.0], 1: [0.0, 1.0], 2: [1.0, 1.0], 3: [1.0, -1.0]}
+    qvec = [1.0, 0.5]
+    if side == "query":
+        qvec = _BAD_VECTORS[bad]
+    else:
+        vec[2] = _BAD_VECTORS[bad]
+    corpus = spark.createDataFrame(list(vec.items()), "vec_id bigint, embedding array<double>")
+    edges = spark.createDataFrame([(0, 1), (0, 2), (0, 3)], "src bigint, dst bigint")
+    entries = spark.createDataFrame([(7, 0)], "query_id bigint, vec_id bigint")
+    queries = spark.createDataFrame([(7, qvec)], "query_id bigint, qvec array<double>")
+    with pytest.raises(ValueError, match="graph_beam_topk"):
+        graph_beam_topk(corpus, edges, entries, queries, k=3, beam=2, hops=1)

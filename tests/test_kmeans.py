@@ -93,3 +93,19 @@ def test_trained_ivf_probe_all_is_exact(spark, emb):
     a = {(r["query_id"], r["vec_id"]) for r in approx.collect()}
     e = {(r["query_id"], r["vec_id"]) for r in exact.collect()}
     assert a == e
+
+
+def test_spherical_fp_result_collects_without_jobs(spark, emb):
+    """The trained centroids are a local relation: every consumer's
+    collect or broadcast of them reads driver memory, not a scan."""
+    cents = kmeans_fit_spherical_fp(emb, k=4, iterations=1)
+    assert cents.schema.simpleString() == "struct<centroid_id:int,cvec:array<double>>"
+    sc = spark.sparkContext
+    sc.setJobGroup("kmeans-centroids", "collect the trained centroids")
+    try:
+        rows = cents.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("kmeans-centroids")) == []
+    assert [r["centroid_id"] for r in rows] == [0, 1, 2, 3]

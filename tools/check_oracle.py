@@ -48,7 +48,8 @@ import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from rag_application_with_vectordb_spark.plans.registry import load_all  # noqa: E402
 from rag_application_with_vectordb_spark.session import get_spark  # noqa: E402

@@ -7,10 +7,12 @@ Usage: python tools/explain_report.py [sf_dir]
 from __future__ import annotations
 
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from rag_application_with_vectordb_spark.plans.registry import load_all  # noqa: E402
 from rag_application_with_vectordb_spark.session import get_spark  # noqa: E402
@@ -548,7 +550,7 @@ def main() -> None:
         out.append(buf.getvalue().rstrip())
         out.append("```")
         out.append("")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
     spark.stop()

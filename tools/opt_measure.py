@@ -22,7 +22,8 @@ import sys
 import time
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from rag_application_with_vectordb_spark.plans.registry import load_all  # noqa: E402
 from rag_application_with_vectordb_spark.session import get_spark  # noqa: E402
@@ -61,7 +62,7 @@ def main() -> None:
         import bench
 
         names = list(bench.HEADLINE)
-    out_dir = os.path.join("/root/repo", "plans", round_dir)
+    out_dir = os.path.join(ROOT, "plans", round_dir)
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("opt_measure")
     log = open(f"/tmp/opt_measure_{tag}.jsonl", "a")
