@@ -147,6 +147,54 @@ def _arrow_f64_matrix(vec, d: int | None = None):
     return V.reshape(n, d), d
 
 
+def _fold_norms(M):
+    """Row l2 norms of a float64 matrix as a sequential per-dimension
+    fold from 0.0 — see :func:`_assign_arrow`."""
+    import numpy as np
+
+    acc = np.zeros(len(M))
+    for j in range(M.shape[1]):
+        acc += M[:, j] * M[:, j]
+    return np.sqrt(acc)
+
+
+def _nearest_rows(V, C, cn, op: str):
+    """Per row of ``V`` (float64, ``(n, d)``), the row index of its
+    nearest centroid in ``C`` (``(k, d)``, ascending centroid id; ``cn``
+    its :func:`_fold_norms`) under the :func:`_assign_arrow` contract,
+    and the row's cosine to that centroid: ``(index, similarity)``. A
+    NaN similarity raises ``ValueError`` naming ``op``."""
+    import numpy as np
+
+    n, k = len(V), len(C)
+    acc = np.zeros((n, k))
+    nv = np.zeros(n)
+    tmp = np.empty((n, k))
+    for j in range(C.shape[1]):  # sequential per-dim fold — see _assign_arrow
+        vj = V[:, j]
+        np.multiply(vj[:, None], C[:, j][None, :], out=tmp)
+        acc += tmp
+        nv += vj * vj
+    np.sqrt(nv, out=nv)
+    denom = nv[:, None] * cn[None, :]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        sims = acc / denom
+    sims[(nv == 0.0)[:, None] | (cn == 0.0)[None, :]] = 0.0
+    if np.isnan(sims).any():
+        raise ValueError(f"{op}: NaN similarity — non-finite input")
+    best = np.argmax(sims, axis=1)  # first max == lowest-cid tiebreak
+    maxv = sims[np.arange(n), best]
+    for i in np.flatnonzero(maxv == 0.0):
+        # Double.compare tiebreak at ±0.0: +0.0 beats -0.0, then lowest
+        # cid within the winning sign (rare by construction; IEEE ==
+        # cannot see the sign)
+        row = sims[i]
+        zs = np.flatnonzero(row == 0.0)
+        pos = zs[~np.signbit(row[zs])]
+        best[i] = pos[0] if pos.size else zs[0]
+    return best, sims[np.arange(n), best]
+
+
 def _assign_arrow(
     corpus: DataFrame,
     cents: list[tuple[int, list[float]]],
@@ -199,44 +247,14 @@ def _assign_arrow(
         import pyarrow as pa
 
         C = np.asarray(mat, dtype=np.float64)  # (k, dim), ascending cid
-        k, d = C.shape
-        cn = np.zeros(k)
-        for j in range(d):  # sequential per-dim fold — see docstring
-            cn += C[:, j] * C[:, j]
-        cn = np.sqrt(cn)
+        cn = _fold_norms(C)
         cid_arr = np.asarray(ids, dtype=np.int64)
         for batch in batches:
             vec = batch.column(1)
-            n = len(vec)
-            if n == 0:
+            if len(vec) == 0:
                 continue
-            V, _ = _arrow_f64_matrix(vec, d)
-            acc = np.zeros((n, k))
-            nv = np.zeros(n)
-            tmp = np.empty((n, k))
-            for j in range(d):  # sequential per-dim fold — see docstring
-                vj = V[:, j]
-                np.multiply(vj[:, None], C[:, j][None, :], out=tmp)
-                acc += tmp
-                nv += vj * vj
-            np.sqrt(nv, out=nv)
-            denom = nv[:, None] * cn[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sims = acc / denom
-            sims[(nv == 0.0)[:, None] | (cn == 0.0)[None, :]] = 0.0
-            if np.isnan(sims).any():
-                raise ValueError("ivf_assign: NaN similarity — non-finite input")
-            best = np.argmax(sims, axis=1)  # first max == lowest-cid tiebreak
-            maxv = sims[np.arange(n), best]
-            for i in np.flatnonzero(maxv == 0.0):
-                # Double.compare tiebreak at ±0.0: +0.0 beats -0.0, then
-                # lowest cid within the winning sign (rare by
-                # construction; IEEE == cannot see the sign)
-                row = sims[i]
-                zs = np.flatnonzero(row == 0.0)
-                pos = zs[~np.signbit(row[zs])]
-                best[i] = pos[0] if pos.size else zs[0]
-            out = pa.array(cid_arr[best])
+            V, _ = _arrow_f64_matrix(vec, C.shape[1])
+            out = pa.array(cid_arr[_nearest_rows(V, C, cn, "ivf_assign")[0]])
             yield pa.record_batch(
                 [batch.column(0), batch.column(1), out],
                 names=[corpus_id, corpus_vec, centroid_id],

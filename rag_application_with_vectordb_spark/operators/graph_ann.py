@@ -31,10 +31,9 @@ Scale design (100 TB posture):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vector import cosine_sim
 from .ann import ivf_assign
 
 __all__ = ["knn_graph_edges", "cell_medoids", "graph_entry_points", "graph_beam_topk"]
@@ -147,37 +146,90 @@ def knn_graph_edges(
 
 def cell_medoids(
     corpus: DataFrame,
-    centroids: DataFrame,
+    centroids,
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
     centroid_id: str = "centroid_id",
     centroid_vec: str = "cvec",
-    dim: int | None = None,
 ) -> DataFrame:
     """Per IVF cell, the member closest to the centroid (cosine DESC,
     id ASC) — the deterministic entry node for searches landing in that
-    cell. Output ``(centroid_id, vec_id)``. ``dim`` engages the
-    unrolled fixed-dim cosine (r12, value-identical — see
-    functions.vector.cosine_sim_sql)."""
-    assigned = ivf_assign(corpus, centroids, corpus_id, corpus_vec)
-    if dim is not None:
-        from ..functions.vector import cosine_sim_sql
+    cell. Output ``(centroid_id bigint, vec_id)``, a local relation
+    sorted by ``centroid_id``: collecting it starts no job.
 
-        sim = F.expr(cosine_sim_sql(corpus_vec, centroid_vec, dim))
-    else:
-        sim = cosine_sim(F.col(corpus_vec), F.col(centroid_vec))
-    joined = assigned.join(F.broadcast(centroids), centroid_id)
-    w = Window.partitionBy(centroid_id).orderBy(F.desc(sim), F.asc(corpus_id))
-    return (
-        joined.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(centroid_id, corpus_id)
+    The call is EAGER: one map-only mapInArrow pass assigns every row
+    to its nearest centroid with ``ivf_assign``'s kernel
+    (``_nearest_rows``, the ``_assign_arrow`` contract) and keeps, per
+    task, each cell's best row; the driver reduces those ≤ k rows per
+    task. The ranking similarity is the assignment's own cosine, so no
+    second similarity pass and no shuffle run. Contract violations
+    (NULL, ragged or non-finite vectors) raise ``ValueError``."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+    from .ann import (
+        ARROW_ASSIGN_MAX,
+        CentroidLimitError,
+        _arrow_f64_matrix,
+        _collect_centroids,
+        _fold_norms,
+        _nearest_rows,
     )
+
+    cents = _collect_centroids(centroids, centroid_id, centroid_vec, ARROW_ASSIGN_MAX)
+    if cents is None:
+        raise CentroidLimitError("cell_medoids", ARROW_ASSIGN_MAX)
+    id_field = corpus.schema[corpus_id]
+    out_schema = StructType(
+        [StructField(centroid_id, LongType(), True), StructField(corpus_id, id_field.dataType, True)]
+    )
+    rows = []
+    if cents:
+        mat = [v for _, v in cents]
+        cids = [c for c, _ in cents]
+        best_schema = StructType(
+            [
+                StructField("cell", LongType(), True),
+                StructField("member", id_field.dataType, True),
+                StructField("sim", DoubleType(), True),
+            ]
+        )
+
+        def best_per_cell(batches):
+            C = np.asarray(mat, dtype=np.float64)  # (k, dim), ascending cid
+            cn = _fold_norms(C)
+            cid_arr = np.asarray(cids, dtype=np.int64)
+            for batch in batches:
+                if batch.num_rows == 0:
+                    continue
+                V, _ = _arrow_f64_matrix(batch.column(1), C.shape[1])
+                cell, sim = _nearest_rows(V, C, cn, "cell_medoids")
+                ids = batch.column(0).to_numpy(zero_copy_only=False)
+                order = np.lexsort((ids, -sim, cell))  # per cell: sim DESC, id ASC
+                _, first = np.unique(cell[order], return_index=True)
+                pick = order[first]
+                yield pa.record_batch(
+                    [pa.array(cid_arr[cell[pick]]), batch.column(0).take(pick), pa.array(sim[pick])],
+                    names=["cell", "member", "sim"],
+                )
+
+        best: dict = {}
+        t = corpus.select(corpus_id, corpus_vec).mapInArrow(best_per_cell, best_schema).toArrow()
+        for c, m, sv in zip(*(t.column(i).to_pylist() for i in range(3))):
+            if c not in best or (-sv, m) < (-best[c][1], best[c][0]):
+                best[c] = (m, sv)
+        rows = sorted((c, m) for c, (m, _) in best.items())
+    table = pa.table(
+        {centroid_id: pa.array([r[0] for r in rows], pa.int64()),
+         corpus_id: [r[1] for r in rows]}
+    )
+    return corpus.sparkSession.createDataFrame(table, out_schema)
 
 
 def graph_entry_points(
     queries: DataFrame,
-    centroids: DataFrame,
+    centroids,
     medoids: DataFrame,
     query_id: str = "query_id",
     query_vec: str = "qvec",
@@ -187,21 +239,54 @@ def graph_entry_points(
 ) -> DataFrame:
     """Each query starts at the medoids of its ``n_entries`` nearest
     cells (the nprobe analog — multiple entries cover queries landing
-    near cell boundaries). Output ``(query_id, vec_id)``."""
-    w = Window.partitionBy(query_id).orderBy(
-        F.desc(cosine_sim(F.col(query_vec), F.col(centroid_vec))), F.asc(centroid_id)
+    near cell boundaries). Output ``(query_id, vec_id)``, distinct, a
+    local relation: collecting it starts no job.
+
+    The call is EAGER: it collects ``queries``, ``centroids`` and
+    ``medoids`` (queries × centroids similarities — driver-sized) and
+    ranks cells per query by (cosine DESC, centroid id ASC) with
+    ``cosine_sim``'s semantics: sequential per-dimension folds from
+    0.0, zero norm → 0.0, a query/centroid dim mismatch → -1.0. A NULL,
+    ragged or non-finite query or centroid vector raises
+    ``ValueError``."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.types import StructField, StructType
+
+    out_schema = StructType(
+        [
+            StructField(query_id, queries.schema[query_id].dataType, queries.schema[query_id].nullable),
+            StructField("vec_id", medoids.schema["vec_id"].dataType, medoids.schema["vec_id"].nullable),
+        ]
     )
-    probe = (
-        queries.crossJoin(F.broadcast(centroids))
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= int(n_entries))
-        .select(query_id, centroid_id)
+    qt = queries.select(query_id, query_vec).toArrow()
+    ct = centroids.select(centroid_id, centroid_vec).toArrow()
+    by_cell: dict = {}
+    mt = medoids.select(centroid_id, "vec_id").toArrow()
+    for c, v in zip(mt.column(0).to_pylist(), mt.column(1).to_pylist()):
+        by_cell.setdefault(c, []).append(v)
+    rows = []
+    if qt.num_rows and ct.num_rows:
+        Q, qn, dq = _beam_vectors(qt.column(1), None, "query vectors", "graph_entry_points")
+        C, cn, dc = _beam_vectors(ct.column(1), None, "centroid vectors", "graph_entry_points")
+        cids = np.array(ct.column(0).to_pylist())
+        if dq != dc:
+            sims = np.full((len(Q), len(C)), -1.0)
+        else:
+            acc = np.zeros((len(Q), len(C)))
+            for j in range(dq):  # sequential per-dim fold
+                acc += Q[:, j][:, None] * C[:, j][None, :]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                sims = acc / (qn[:, None] * cn[None, :])
+            sims[(qn == 0.0)[:, None] | (cn == 0.0)[None, :]] = 0.0
+        for q, row in zip(qt.column(0).to_pylist(), sims):
+            cells = np.lexsort((cids, -row))[: int(n_entries)]
+            nodes = {v for c in cids[cells].tolist() for v in by_cell.get(c, ())}
+            rows.extend((q, v) for v in sorted(nodes))
+    table = pa.table(
+        {query_id: [r[0] for r in rows], "vec_id": [r[1] for r in rows]}
     )
-    return (
-        probe.join(F.broadcast(medoids), centroid_id)
-        .select(query_id, "vec_id")
-        .distinct()
-    )
+    return queries.sparkSession.createDataFrame(table, out_schema)
 
 
 def _id_in(col: str, ids) -> Column:
@@ -209,10 +294,10 @@ def _id_in(col: str, ids) -> Column:
     return F.expr(f"`{col}` IN ({','.join(str(int(i)) for i in ids)})")
 
 
-def _beam_vectors(vec, d: int | None, what: str):
-    """Decode a vector column for :func:`graph_beam_topk` and fold its
-    norms: ``(matrix, norms, d)``. Contract violations raise a
-    ``ValueError`` naming the operator."""
+def _beam_vectors(vec, d: int | None, what: str, op: str = "graph_beam_topk"):
+    """Decode a vector column for ``op`` and fold its norms:
+    ``(matrix, norms, d)``. Contract violations raise a ``ValueError``
+    naming ``op``."""
     import numpy as np
 
     from .ann import _arrow_f64_matrix
@@ -220,9 +305,9 @@ def _beam_vectors(vec, d: int | None, what: str):
     try:
         V, d = _arrow_f64_matrix(vec, d)
     except ValueError as e:
-        raise ValueError(f"graph_beam_topk: {what}: {e}") from None
+        raise ValueError(f"{op}: {what}: {e}") from None
     if not np.isfinite(V).all():
-        raise ValueError(f"graph_beam_topk: {what}: NaN or infinite components")
+        raise ValueError(f"{op}: {what}: NaN or infinite components")
     nrm = np.zeros(len(V))
     for j in range(d):  # sequential per-dim fold, as in _assign_arrow
         nrm += V[:, j] * V[:, j]

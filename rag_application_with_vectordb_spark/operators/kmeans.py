@@ -151,9 +151,10 @@ def kmeans_fit_spherical_fp(
     fp64) — with scale 2^20 that is ~8e12 vectors per cluster; shrink
     ``scale`` if a cluster could exceed it.
 
-    Per iteration: one broadcast of k×dim centroids, one corpus scan, one
-    (centroid, dim)-keyed aggregation with map-side partial sums — the
-    corpus itself never shuffles. Output: ``(centroid_id, cvec)``.
+    Per iteration: one map-only mapInArrow pass over the cached vectors
+    that assigns each row and sums its fixed-point components per
+    centroid, and one collect of at most k rows per task — nothing
+    shuffles after the one repartition. Output: ``(centroid_id, cvec)``.
 
     ``sample_mod``: train on the deterministic ``id % sample_mod == 0``
     subsample instead of the full corpus — the standard IVF practice
@@ -166,9 +167,8 @@ def kmeans_fit_spherical_fp(
 
     The result is a local relation built from an Arrow table (k×dim
     doubles): collecting or broadcasting it starts no job, so the
-    centroid collects of ``ivf_assign`` / ``ann_ivf_topk`` and the
-    broadcasts of ``cell_medoids`` / ``graph_entry_points`` read it for
-    free.
+    centroid collects of ``ivf_assign`` / ``ann_ivf_topk`` /
+    ``cell_medoids`` / ``graph_entry_points`` read it for free.
     """
     import pyarrow as pa
 
@@ -202,75 +202,102 @@ def kmeans_fit_spherical_fp_values(
     only loads it), so callers that issue many queries against one
     corpus should train once via this function and reuse the values —
     training is deterministic, making the reuse result-invisible."""
-    from ..operators.ann import LITERAL_ASSIGN_MAX, _assign_arrow, nearest_centroid_ids
-
     s = int(scale)
     if sample_mod is not None and int(sample_mod) > 1:
         points = points.filter(F.col(id_col) % int(sample_mod) == 0)
 
     # Centroids live on the driver between iterations (k×dim doubles —
-    # the same sanctioned boundary as ask()'s k rows). Assignment is
-    # ivf_assign's two forms — a per-row literal argmax up to
-    # LITERAL_ASSIGN_MAX centroids, the mapInArrow kernel above — so each
-    # iteration costs ONE corpus scan + one (centroid, dim) aggregation:
-    # the corpus is never shuffled and the lazy plan never re-derives
-    # earlier iterations.
+    # the same sanctioned boundary as ask()'s k rows). Each iteration is
+    # ONE map-only mapInArrow pass (:func:`_fp_partial_sums`) over the
+    # cached vectors and one collect of k×dim integer partial sums per
+    # task: no shuffle, and the lazy plan never re-derives earlier
+    # iterations.
     init = points.orderBy(F.asc(id_col)).limit(int(k)).select(id_col, vec_col).collect()
     init.sort(key=lambda r: r[id_col])
     cents: list[tuple[int, list[float]]] = [
         (i, [float(x) for x in r[vec_col]]) for i, r in enumerate(init)
     ]
-    # The (vector, norm) projection is centroid-independent — compute it
-    # ONCE, spread across the session's cores (the fixture's single-file
-    # scan is 1 partition, which would serialize every iteration's argmax
-    # onto one core), and cache it so each Lloyd iteration re-reads the
-    # in-memory columnar batches instead of re-scanning parquet. The
-    # repartition is result-safe: assignment is per-row and the mean
-    # update sums exact integers (order-independent).
+    # Spread the vectors across the session's cores (the fixture's
+    # single-file scan is 1 partition, which would serialize every
+    # iteration's argmax onto one core) and cache them so each Lloyd
+    # iteration re-reads the in-memory columnar batches instead of
+    # re-scanning parquet. The repartition is result-safe: assignment is
+    # per-row and the mean update sums exact integers (order-independent).
     parallelism = points.sparkSession.sparkContext.defaultParallelism
-    pre = (
-        points.select(
-            F.col(id_col).alias("__id"), as_double(F.col(vec_col)).alias("__vd")
-        )
-        .repartition(parallelism)
-        .withColumn("__nv", F.sqrt(dot(F.col("__vd"), F.col("__vd"))))
-        .persist()
-    )
+    pre = points.select(F.col(vec_col).alias("__v")).repartition(parallelism).persist()
     try:
-        for _ in range(int(iterations)):
-            if len(cents) > LITERAL_ASSIGN_MAX:
-                # large k: the literal argmax (k*dim nodes) drops out of
-                # codegen — use the bit-identical Arrow kernel instead
-                assigned = _assign_arrow(pre, cents, "__id", "__vd", "centroid_id")
-            else:
-                nearest = nearest_centroid_ids(
-                    F.col("__vd"), F.col("__nv"), cents, nprobe=1
-                )
-                # two selects: a Generate (posexplode) in the same
-                # projection as the struct-array argmax strips the
-                # struct field names
-                assigned = pre.select(
-                    F.element_at(nearest, 1).alias("centroid_id"), F.col("__vd")
-                )
-            comps = assigned.select(
-                "centroid_id", F.posexplode("__vd").alias("dim", "val")
-            )
-            sums = comps.groupBy("centroid_id", "dim").agg(
-                F.sum(F.floor(F.col("val") * F.lit(float(s))).cast("long")).alias("fp_sum"),
-                F.count("*").alias("n"),
-            ).collect()
-            by_cid: dict[int, dict[int, float]] = {}
-            for r in sums:
-                # exact ints → correctly-rounded fp64 quotient, identical to
-                # the oracle's CAST(fp_sum AS DOUBLE)/CAST(n*scale AS DOUBLE)
-                by_cid.setdefault(int(r["centroid_id"]), {})[r["dim"]] = r["fp_sum"] / (r["n"] * s)
+        for _ in range(int(iterations) if cents else 0):
+            fp_sums: dict[int, list[int]] = {}
+            counts: dict[int, int] = {}
+            for r in _fp_partial_sums(pre, cents, s).collect():
+                cid = int(r["centroid_id"])
+                prev = fp_sums.get(cid)
+                part = list(r["fp_sum"])
+                fp_sums[cid] = part if prev is None else [x + y for x, y in zip(prev, part)]
+                counts[cid] = counts.get(cid, 0) + int(r["n"])
+            # exact ints → correctly-rounded fp64 quotient, identical to
+            # the oracle's CAST(fp_sum AS DOUBLE)/CAST(n*scale AS DOUBLE)
             cents = [
-                (cid, [by_cid[cid][j] for j in range(len(cvec))]) if cid in by_cid else (cid, cvec)
+                (cid, [x / (counts[cid] * s) for x in fp_sums[cid]]) if cid in fp_sums else (cid, cvec)
                 for cid, cvec in cents  # empty cluster keeps its previous centroid
             ]
     finally:
         pre.unpersist()
     return cents
+
+
+def _fp_partial_sums(vectors: DataFrame, cents: list[tuple[int, list[float]]], scale: int) -> DataFrame:
+    """One Lloyd step's statistics as ONE map-only mapInArrow pass over
+    the single vector column of ``vectors``: each row goes to its
+    nearest centroid (max cosine, lowest id on ties — the ``ivf_assign``
+    contract, through the same numpy kernel as ``_assign_arrow``), and
+    each task emits, per centroid it saw, ``(centroid_id, fp_sum, n)``
+    with ``fp_sum[j] = Σ floor(v[j] * scale)`` as exact integers — at
+    most k rows per task for the driver to add up."""
+    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
+
+    from .ann import _arrow_f64_matrix, _fold_norms, _nearest_rows
+
+    mat = [v for _, v in cents]
+    ids = [c for c, _ in cents]
+    out_schema = StructType(
+        [
+            StructField("centroid_id", LongType(), True),
+            StructField("fp_sum", ArrayType(LongType()), True),
+            StructField("n", LongType(), True),
+        ]
+    )
+
+    def partial_sums(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        C = np.asarray(mat, dtype=np.float64)  # (k, dim), ascending cid
+        cn = _fold_norms(C)
+        k, d = C.shape
+        tot = np.zeros((k, d), dtype=np.int64)
+        cnt = np.zeros(k, dtype=np.int64)
+        for batch in batches:
+            vec = batch.column(0)
+            if len(vec) == 0:
+                continue
+            V, _ = _arrow_f64_matrix(vec, d)
+            best, _ = _nearest_rows(V, C, cn, "kmeans_fit_spherical_fp")
+            # val * scale is exact (a power-of-two exponent shift), so the
+            # floor is the same integer Spark's floor(val * scale) gives
+            np.add.at(tot, best, np.floor(V * float(scale)).astype(np.int64))
+            cnt += np.bincount(best, minlength=k)
+        seen = np.flatnonzero(cnt)
+        yield pa.record_batch(
+            [
+                pa.array(np.asarray(ids, dtype=np.int64)[seen]),
+                pa.array(list(tot[seen]), pa.list_(pa.int64())),
+                pa.array(cnt[seen]),
+            ],
+            names=["centroid_id", "fp_sum", "n"],
+        )
+
+    return vectors.mapInArrow(partial_sums, out_schema)
 
 
 def inertia(points: DataFrame, centroids: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding") -> float:

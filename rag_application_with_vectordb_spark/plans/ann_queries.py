@@ -3315,7 +3315,7 @@ def _graph_index(
             medoids = spark.read.parquet(mpath).persist()
         else:
             edges = knn_graph_edges(corpus, cents, m=_GR_M, dim=dim).persist()
-            medoids = cell_medoids(corpus, cents, dim=dim).persist()
+            medoids = cell_medoids(corpus, cents)  # a local relation
             if epath:
                 try:
                     etmp, mtmp = (

@@ -39,8 +39,8 @@ def clustered(spark):
         _cl_trained_centroids(spark, corpus), "centroid_id int, cvec array<double>"
     )
     edges = knn_graph_edges(corpus, cents, m=6).persist()
-    medoids = cell_medoids(corpus, cents).persist()
-    edges.count(), medoids.count()
+    medoids = cell_medoids(corpus, cents)  # a local relation: nothing to cache
+    edges.count()
     queries = corpus.filter((F.col("vec_id") >= 100) & (F.col("vec_id") < 110)).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
@@ -312,3 +312,101 @@ def test_beam_contract_violation_is_named(spark, side, bad):
     queries = spark.createDataFrame([(7, qvec)], "query_id bigint, qvec array<double>")
     with pytest.raises(ValueError, match="graph_beam_topk"):
         graph_beam_topk(corpus, edges, entries, queries, k=3, beam=2, hops=1)
+
+
+def _declarative_cell_medoids(corpus, centroids):
+    """The window-plan ``cell_medoids`` that the eager kernel replaced,
+    kept as its reference: per cell, the member with the highest cosine
+    to the centroid (cosine DESC, id ASC)."""
+    from pyspark.sql import Window
+
+    from rag_application_with_vectordb_spark.functions.vector import cosine_sim
+    from rag_application_with_vectordb_spark.operators.ann import ivf_assign
+
+    sim = cosine_sim(F.col("embedding"), F.col("cvec"))
+    joined = ivf_assign(corpus, centroids).join(F.broadcast(centroids), "centroid_id")
+    w = Window.partitionBy("centroid_id").orderBy(F.desc(sim), F.asc("vec_id"))
+    return (
+        joined.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .select("centroid_id", "vec_id")
+    )
+
+
+def _declarative_entry_points(queries, centroids, medoids, n_entries):
+    """The window-plan ``graph_entry_points`` that the eager ranking
+    replaced, kept as its reference."""
+    from pyspark.sql import Window
+
+    from rag_application_with_vectordb_spark.functions.vector import cosine_sim
+
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc(cosine_sim(F.col("qvec"), F.col("cvec"))), F.asc("centroid_id")
+    )
+    probe = (
+        queries.crossJoin(F.broadcast(centroids))
+        .withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= n_entries)
+        .select("query_id", "centroid_id")
+    )
+    return probe.join(F.broadcast(medoids), "centroid_id").select("query_id", "vec_id").distinct()
+
+
+def _collect_jobs(spark, df, group):
+    """``df.collect()`` and the ids of the jobs it started; ``group``
+    must be unique per call, as a job group keeps its jobs."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "collect an eager operator's output")
+    try:
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return rows, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("layout", ["as_built", "repartitioned"])
+def test_cell_medoids_match_window_reference(spark, clustered, layout):
+    corpus, cents, _, _, _ = clustered
+    if layout == "repartitioned":
+        corpus = corpus.repartition(7)
+    got = cell_medoids(corpus, cents)
+    ref = _declarative_cell_medoids(corpus, cents)
+    assert [(f.name, f.dataType) for f in got.schema] == [
+        (f.name, f.dataType) for f in ref.schema
+    ]
+    rows, jobs = _collect_jobs(spark, got, f"medoids-{layout}")
+    assert jobs == []
+    assert sorted(map(tuple, rows)) == sorted(map(tuple, ref.collect()))
+    assert len(rows) > 1
+
+
+@pytest.mark.parametrize("n_entries", [1, 2, 3])
+def test_entry_points_match_window_reference(spark, clustered, n_entries):
+    corpus, cents, _, medoids, queries = clustered
+    got = graph_entry_points(queries, cents, medoids, n_entries=n_entries)
+    ref = _declarative_entry_points(queries, cents, medoids, n_entries)
+    assert [(f.name, f.dataType) for f in got.schema] == [
+        (f.name, f.dataType) for f in ref.schema
+    ]
+    rows, jobs = _collect_jobs(spark, got, f"entries-{n_entries}")
+    assert jobs == []
+    assert sorted(map(tuple, rows)) == sorted(map(tuple, ref.collect()))
+    assert len(rows) >= 10
+
+
+def test_entry_points_dim_mismatch_ranks_by_centroid_id(spark, clustered):
+    """``cosine_sim`` gives -1.0 for every centroid when the dims differ,
+    so the ranking falls to the lowest centroid ids."""
+    _, cents, _, medoids, _ = clustered
+    queries = spark.createDataFrame([(1, [1.0, 2.0])], "query_id long, qvec array<double>")
+    got = graph_entry_points(queries, cents, medoids, n_entries=2).collect()
+    ref = _declarative_entry_points(queries, cents, medoids, 2).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, ref))
+
+
+def test_entry_points_null_query_vector_is_named(spark, clustered):
+    _, cents, _, medoids, _ = clustered
+    queries = spark.createDataFrame([(1, None)], "query_id long, qvec array<double>")
+    with pytest.raises(ValueError, match="graph_entry_points"):
+        graph_entry_points(queries, cents, medoids)
